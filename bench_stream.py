@@ -85,7 +85,7 @@ def measure(spark, copies: int) -> dict:
     embedding corpus in both regimes; returns the per-scale record."""
     from pyspark.sql import functions as F
 
-    from data_engineer_project_weather_analytics_spark.operators import similarity
+    from data_engineer_project_weather_analytics_spark.operators import index_store, similarity
     from data_engineer_project_weather_analytics_spark.operators.text import (
         deterministic_split,
     )
@@ -103,19 +103,18 @@ def measure(spark, copies: int) -> dict:
 
     # the static index the stream probes is the STORED auto-k index —
     # the x54c artifacts (survivors + BOTH codebooks), built once per
-    # replica and cached (r12, VERDICT r11 task 5): the stream no
-    # longer pays the in-harness fit, and the probe assigns via the
-    # TWO-LEVEL literal route (with_two_level_cell_assignment, ~2·√k
-    # cosines per row) instead of the flat k-wide argmax that
-    # dominated the r11 100x point (104.6 rows/s at k=639).
-    idx = os.path.join(WORK_DIR, f"semidx_x{copies}")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        similarity.semdedup_index_write_auto(
-            corpus, "vec_id", "embedding", idx
-        )
-        with open(marker, "w") as fh:
-            fh.write(rep_dir)
+    # replica content by index_store.ensure_index (r12, VERDICT r11
+    # task 5): the stream no longer pays the in-harness fit, and the
+    # probe assigns via the TWO-LEVEL literal route
+    # (with_two_level_cell_assignment, ~2·√k cosines per row) instead
+    # of the flat k-wide argmax that dominated the r11 100x point
+    # (104.6 rows/s at k=639).
+    idx = index_store.ensure_index(
+        WORK_DIR, "sem_auto", {}, [f"{rep_dir}/embeddings.parquet"],
+        lambda d: similarity.semdedup_index_write_auto(
+            corpus, "vec_id", "embedding", d
+        ),
+    )
     survivors = spark.read.parquet(f"{idx}/survivors")
     fmap_rows = [
         (r["cell"], list(r["centroid"]), r["coarse"])

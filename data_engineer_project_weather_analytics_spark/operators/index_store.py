@@ -1,5 +1,9 @@
 """Stored-index housekeeping shared by the index families.
 
+:func:`ensure_index` is the build entry point: every stored index is
+built through it, once per content key, via the crash-safe
+:func:`rebuild_index` swap.
+
 The append lifecycle (``dedup.lsh_index_append``,
 ``similarity.semdedup_index_append``) adds a handful of parquet files
 per ingestion batch — after thousands of batches a probe lists and
@@ -36,6 +40,8 @@ as under append — re-centering is a rebuild, not a delete.
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import json
 import os
 import shutil
@@ -85,6 +91,14 @@ PQ_INDEX_LAYOUT: dict[str, dict] = {
     "codes": {"partition": ["cell"], "sort": ["vec_id"], "key": "vec_id"},
     "codebook": {"partition": [], "sort": [], "key": None},
     "centroids": {"partition": [], "sort": ["cell"], "key": None},
+}
+#: family → layout, part of :func:`ensure_index`'s key (``sem_auto``:
+#: the auto-k two-level SemDeDup index, named apart from ``sem``)
+INDEX_LAYOUTS: dict[str, dict[str, dict]] = {
+    "lsh": LSH_INDEX_LAYOUT,
+    "pq": PQ_INDEX_LAYOUT,
+    "sem": SEM_INDEX_LAYOUT,
+    "sem_auto": SEM_INDEX_LAYOUT,
 }
 
 
@@ -293,6 +307,54 @@ def rebuild_index(index_dir: str, build: Callable[[str], None]) -> None:
     os.remove(os.path.join(root, REBUILD_COMPLETE))
 
 
+def _input_stats(inputs: list[str]) -> list[tuple[str, int, int]]:
+    """(path, size, mtime_ns) of every file under each input path."""
+    stats = []
+    for top in inputs:
+        top = os.path.abspath(top)
+        files = [top] if os.path.isfile(top) else sorted(
+            os.path.join(d, f) for d, _dirs, fs in os.walk(top) for f in fs
+        )
+        for f in files:
+            st = os.stat(f)
+            stats.append((f, st.st_size, st.st_mtime_ns))
+    return stats
+
+
+def ensure_index(
+    root: str,
+    family: str,
+    params: dict,
+    inputs: list[str],
+    build: Callable[[str], None],
+) -> str:
+    """Directory of the ``family`` index that ``build(target_dir)``
+    writes from ``inputs`` with ``params``, built first if missing.
+
+    It is ``<root>/<key>_<family>``, ``key`` the md5 of the family,
+    ``params``, the family's layout dict and ``(path, size, mtime_ns)``
+    of every input file: a param, layout or input change resolves to a
+    fresh directory, never a stale build (so a writer change must show
+    in the layout dict or the params).  Callers serialize on an
+    exclusive ``flock`` of ``<dir>.lock``; under it a crashed build is
+    repaired (:func:`recover_rebuild`) and a missing index built
+    through :func:`rebuild_index`.  Superseded keys are not deleted."""
+    blob = json.dumps(
+        [family, params, INDEX_LAYOUTS[family], _input_stats(inputs)],
+        sort_keys=True,
+    )
+    index_dir = os.path.join(
+        root, f"{hashlib.md5(blob.encode()).hexdigest()}_{family}"
+    )
+    os.makedirs(root, exist_ok=True)
+    with open(index_dir + ".lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        recover_rebuild(index_dir)
+        if not os.path.isdir(index_dir):
+            rebuild_index(index_dir, build)
+    return index_dir
+
+
 def recover_rebuild(index_dir: str) -> str | None:
     """Repair a crashed :func:`rebuild_index` (the root-level analog of
     :func:`recover_index`): live index present → drop staged/trash
@@ -301,25 +363,32 @@ def recover_rebuild(index_dir: str) -> str | None:
     missing otherwise → roll the trash copy back.  Idempotent; returns
     the action taken or None."""
     root = index_dir.rstrip("/")
-    staged = root + ".rebuild_staged"
-    trash = root + ".rebuild_trash"
-    if os.path.isdir(root):
+    action = _recover_swap(
+        root, root + ".rebuild_staged", root + ".rebuild_trash", REBUILD_COMPLETE
+    )
+    if action == "completed_swap":
+        os.remove(os.path.join(root, REBUILD_COMPLETE))
+    return action
+
+
+def _recover_swap(live: str, staged: str, trash: str, marker: str) -> str | None:
+    """The crash-repair rule shared by both staged-rename swaps (see
+    :func:`recover_index`); ``marker`` is the file that proves a staged
+    write complete.  Returns the action taken or None."""
+    if os.path.isdir(live):
         residue = []
         for p, what in ((staged, "staged"), (trash, "trash")):
             if os.path.isdir(p):
                 shutil.rmtree(p)
                 residue.append(what)
         return "dropped_" + "_and_".join(residue) if residue else None
-    if os.path.isdir(staged) and os.path.exists(
-        os.path.join(staged, REBUILD_COMPLETE)
-    ):
-        os.replace(staged, root)
-        os.remove(os.path.join(root, REBUILD_COMPLETE))
+    if os.path.isdir(staged) and os.path.exists(os.path.join(staged, marker)):
+        os.replace(staged, live)
         shutil.rmtree(trash, ignore_errors=True)
         return "completed_swap"
     if os.path.isdir(trash):
         shutil.rmtree(staged, ignore_errors=True)
-        os.replace(trash, root)
+        os.replace(trash, live)
         return "rolled_back"
     return None
 
@@ -343,25 +412,12 @@ def recover_index(index_dir: str, layout: dict[str, dict]) -> dict[str, str]:
     """
     actions: dict[str, str] = {}
     for sub in layout:
-        path = os.path.join(index_dir, sub)
-        staged = os.path.join(index_dir, f".compact_{sub}")
-        trash = os.path.join(index_dir, f".compact_trash_{sub}")
-        if os.path.isdir(path):
-            residue = []
-            for p, what in ((staged, "staged"), (trash, "trash")):
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-                    residue.append(what)
-            if residue:
-                actions[sub] = "dropped_" + "_and_".join(residue)
-        elif os.path.isdir(staged) and os.path.exists(
-            os.path.join(staged, "_SUCCESS")
-        ):
-            os.replace(staged, path)
-            shutil.rmtree(trash, ignore_errors=True)
-            actions[sub] = "completed_swap"
-        elif os.path.isdir(trash):
-            shutil.rmtree(staged, ignore_errors=True)
-            os.replace(trash, path)
-            actions[sub] = "rolled_back"
+        action = _recover_swap(
+            os.path.join(index_dir, sub),
+            os.path.join(index_dir, f".compact_{sub}"),
+            os.path.join(index_dir, f".compact_trash_{sub}"),
+            "_SUCCESS",
+        )
+        if action:
+            actions[sub] = action
     return actions

@@ -492,17 +492,17 @@ def _pin_codebook(df: DataFrame, single_partition: bool = True) -> DataFrame:
 
     LAZY, not eager (round 13): ``eager=False`` truncates the logical
     plan identically at construction (the returned frame wraps a
-    LogicalRDD either way — what caps Catalyst analysis), but defers
-    the materialization into the first consuming action.  Each eager
-    pin was a whole separate Spark job (~0.3-0.5 s of fixed local
-    overhead, guide §1) — the two-level fit paid ~2·n_iter of them per
-    query; lazily the same work rides the consuming job's stages and
-    the RDD is computed once and cached (``localCheckpoint`` persists
-    on materialization), with every later consumer reading the blocks.
-    It also puts the fit work back INSIDE any harness's timed action
-    (bench_scale constructs plans before t0 — the r12 ADVICE finding),
-    so measured wall-clocks include the work instead of leaking it
-    into construction.
+    LogicalRDD either way — what caps Catalyst analysis) and removes
+    only the final pin job: each eager pin was a whole separate Spark
+    job, and the two-level fit paid ~2·n_iter of them per query.  It
+    does NOT defer the fit: under AQE, taking the pinned subtree's RDD
+    finalizes its adaptive plan, which runs every upstream shuffle
+    stage (the Lloyd passes) at plan construction.  The fit work
+    therefore lands in ``fn()``, not in the consuming action — which
+    is why bench_scale starts its timer above ``fn()`` (journal epoch
+    ``r13-t0-above-fn``).  Once materialized, the RDD is cached
+    (``localCheckpoint`` persists it) and every later consumer reads
+    the blocks.
 
     Values are unchanged — the pinned rows are the same deterministic
     µ-quantized centroids the lazy plan computes — so oracle hashes
@@ -514,12 +514,11 @@ def _pin_codebook(df: DataFrame, single_partition: bool = True) -> DataFrame:
     stay sharded, exactly like its join strategy).
 
     Why not collect-to-literal (the VERDICT r12 proposal): collecting
-    the codebook to the driver per iteration is an EAGER action at
-    plan-construction time — it would move the entire fit back outside
-    bench_scale's timed region (the exact mis-measurement the lazy pin
-    fixes) and route corpus-derived state through the driver for no
-    measured gain over the lazy pin (the pin-job overhead is what the
-    collect was meant to delete, and eager=False deletes it too)."""
+    the codebook to the driver per iteration is one more EAGER action
+    per iteration that routes corpus-derived state through the driver
+    for no measured gain over the lazy pin (the pin-job overhead is
+    what the collect was meant to delete, and eager=False deletes it
+    too)."""
     pinned = df.coalesce(1) if single_partition else df
     return pinned.localCheckpoint(eager=False)
 

@@ -148,9 +148,10 @@ def x34_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three times below (both pair sides + the source list): pin it
     # (LAZY localCheckpoint, the r13 _pin_codebook rationale) so the
     # expensive pass plans and executes exactly once instead of 4×
-    # statically / ReusedExchange-dependent at runtime — lazily, so
-    # the pass rides the consuming action (no separate pin job, and
-    # the work stays inside any harness's timed region)
+    # statically / ReusedExchange-dependent at runtime.  Lazy removes
+    # only the separate pin job: under AQE the pass's shuffle stages
+    # still run here, at plan construction, so a harness must start
+    # its timer above fn() to see them (bench_scale does)
     sk = (
         hv.select("source", "h", F.row_number().over(rn).alias("__r"))
         .filter(F.col("__r") <= _KMV_K)

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_engineer_project_weather_analytics_spark.operators import dedup, multimodal, similarity, text
+from data_engineer_project_weather_analytics_spark.operators import dedup, index_store, multimodal, similarity, text
 from data_engineer_project_weather_analytics_spark.plans.hints import maybe_broadcast
 from data_engineer_project_weather_analytics_spark.sources.catalog import load_table
 
@@ -171,25 +171,36 @@ def x53b_incremental_neardup_stored(spark: SparkSession, sf_dir: str) -> DataFra
     query time — per-batch cost is |batch| shingling plus the probe
     and verify stages.  Byte-identical to x53 by construction →
     shares x53's oracle text verbatim."""
-    import hashlib
-    import os
+    return _lsh_stored_probe(spark, sf_dir, retract=False)
 
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    # "_p2": band-partitioned sigs layout (r12) — old unpartitioned
-    # caches under the bare tag must not be reused
-    idx = os.path.join(_LSH_INDEX_ROOT, tag + "_p2")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(text.deterministic_split("doc_id") == "train")
-        dedup.lsh_index_write(corpus, "doc_id", "text", idx, n=3, n_bands=8)
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
+
+def _lsh_stored_probe(spark: SparkSession, sf_dir: str, retract: bool) -> DataFrame:
+    """x53b/x53c: build the corpus LSH index once per content key —
+    with ``retract``, minus the ``RETRACT_SPLIT_HEX`` slice deleted
+    after the write — and probe the test-side batch against it."""
     docs = load_table(spark, sf_dir, "documents")
+    corpus = docs.filter(text.deterministic_split("doc_id") == "train")
+    params = {"n": 3, "n_bands": 8}
+
+    def build(d: str) -> None:
+        dedup.lsh_index_write(corpus, "doc_id", "text", d, **params)
+        if retract:
+            retracted = corpus.filter(
+                F.md5(F.col("doc_id").cast("string")) < RETRACT_SPLIT_HEX
+            ).select("doc_id")
+            index_store.delete_from_index(
+                spark, d, index_store.LSH_INDEX_LAYOUT, retracted
+            )
+
+    idx = index_store.ensure_index(
+        _LSH_INDEX_ROOT, "lsh",
+        {**params, "retract_below": RETRACT_SPLIT_HEX if retract else None},
+        [f"{sf_dir}/documents.parquet"], build,
+    )
     batch = docs.filter(text.deterministic_split("doc_id") == "test")
     return dedup.lsh_probe_stored(
         spark, idx, batch, "doc_id", "text",
-        n=3, n_bands=8, max_bucket=LSH_MAX_BUCKET, threshold=0.1,
+        max_bucket=LSH_MAX_BUCKET, threshold=0.1, **params,
     ).select(
         F.col("id_a").alias("corpus_doc_id"),
         F.col("id_b").alias("batch_doc_id"),
@@ -220,36 +231,7 @@ def x53c_incremental_neardup_retracted(
     corpus narrowed to the retained docs — any ghost row a broken
     delete left behind (a retracted doc still matching probes) fails
     the hash check immediately."""
-    import hashlib
-    import os
-
-    from data_engineer_project_weather_analytics_spark.operators import index_store
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_LSH_INDEX_ROOT, tag + "_p2r")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        docs = load_table(spark, sf_dir, "documents")
-        corpus = docs.filter(text.deterministic_split("doc_id") == "train")
-        dedup.lsh_index_write(corpus, "doc_id", "text", idx, n=3, n_bands=8)
-        retracted = corpus.filter(
-            F.md5(F.col("doc_id").cast("string")) < RETRACT_SPLIT_HEX
-        ).select("doc_id")
-        index_store.delete_from_index(
-            spark, idx, index_store.LSH_INDEX_LAYOUT, retracted
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(text.deterministic_split("doc_id") == "test")
-    return dedup.lsh_probe_stored(
-        spark, idx, batch, "doc_id", "text",
-        n=3, n_bands=8, max_bucket=LSH_MAX_BUCKET, threshold=0.1,
-    ).select(
-        F.col("id_a").alias("corpus_doc_id"),
-        F.col("id_b").alias("batch_doc_id"),
-        "jaccard",
-    )
+    return _lsh_stored_probe(spark, sf_dir, retract=True)
 
 
 #: hex threshold of the deterministic "benchmark/eval" slice: docs with
@@ -447,23 +429,13 @@ def x54b_incremental_semdedup_stored(
     corpus pair stream in the per-query plan — the recurring cost is
     the probe itself.  Byte-identical to x54 by construction → shares
     x54's oracle text verbatim."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_SEM_INDEX_ROOT, tag)
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(text.deterministic_split("vec_id") == "train")
-        similarity.semdedup_index_write(
-            corpus, "vec_id", "embedding", idx,
-            k=similarity.KMEANS_K, n_iter=similarity.KMEANS_ITERS,
-            threshold=0.8,
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(text.deterministic_split("vec_id") == "train")
+    params = {"k": similarity.KMEANS_K, "n_iter": similarity.KMEANS_ITERS, "threshold": 0.8}
+    idx = index_store.ensure_index(
+        _SEM_INDEX_ROOT, "sem", params, [f"{sf_dir}/embeddings.parquet"],
+        lambda d: similarity.semdedup_index_write(corpus, "vec_id", "embedding", d, **params),
+    )
     batch = emb.filter(text.deterministic_split("vec_id") == "test")
     return similarity.semdedup_incremental_stored(
         spark, idx, batch, "vec_id", "embedding", threshold=0.8
@@ -1140,42 +1112,37 @@ def x50_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: stored-PQ-index root: build-once cache keyed to the sf dir (path
-#: hash).  /tmp because the testdata dirs are read-only; in production
-#: this is a lakehouse table the ingestion pipeline maintains.
+#: stored-PQ-index root: build-once cache (index_store.ensure_index).
+#: /tmp because the testdata dirs are read-only; in production this is
+#: a lakehouse table the ingestion pipeline maintains.
 _PQ_INDEX_ROOT = "/tmp/spark_graft_pq_index"
+
+
+def _pq_stored_index(sf_dir: str, emb: DataFrame, **extra) -> str:
+    """x50b/x51b's BUILD half: the PQ index of all of ``emb`` (IVF
+    cells from ``cell_col`` when given), once per content key."""
+    params = {"dim": _PQ_DIM, "m": _PQ_M, "n_codewords": _PQ_CODEWORDS, **extra}
+    return index_store.ensure_index(
+        _PQ_INDEX_ROOT, "pq", params, [f"{sf_dir}/embeddings.parquet"],
+        lambda d: similarity.pq_index_write(emb, "vec_id", "embedding", d, **params),
+    )
 
 
 def x50b_pq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x50 split into the production BUILD/QUERY halves: the PQ codes
     and codebook are materialized to parquet ONCE per corpus
-    (operators/similarity.py:pq_index_write — idempotent, keyed to the
-    sf dir) and the query scans the STORED codes (pq_topk_stored):
-    m=4 ints per row instead of 64 floats, distance tables from the
-    stored quantizer max, no codebook-training stages in the per-query
-    plan (plan-gated).  This is the real 100 TB ANN read path — build
+    (operators/similarity.py:pq_index_write via _pq_stored_index) and
+    the query scans the STORED codes (pq_topk_stored): m=4 ints per
+    row instead of 64 floats, distance tables from the stored
+    quantizer max, no codebook-training stages in the per-query plan
+    (plan-gated).  This is the real 100 TB ANN read path — build
     once, probe forever; x50's in-query coding is the oracle-friendly
     single-statement form.  Output is byte-identical to x50 by
     construction, so this query shares x50's DuckDB oracle verbatim."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_PQ_INDEX_ROOT, tag)
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.pq_index_write(
-            emb, "vec_id", "embedding", idx,
-            dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _PQ_QUERIES
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.pq_topk_stored(
-        spark, idx, queries, "vec_id", "embedding",
+        spark, _pq_stored_index(sf_dir, emb),
+        emb.filter(F.col("vec_id") < _PQ_QUERIES), "vec_id", "embedding",
         dim=_PQ_DIM, m=_PQ_M, k=_PQ_TOPK,
     )
 
@@ -1203,28 +1170,10 @@ def x51b_ivfpq_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast probe set — each query touches only its probed posting
     lists, and no training stages appear in the per-query plan.
     Byte-identical to x51 by construction → shares x51's oracle."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    # "_ivf2": cell-partitioned codes layout (r12) — old unpartitioned
-    # caches under "_ivf" must not be reused
-    idx = os.path.join(_PQ_INDEX_ROOT, tag + "_ivf2")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        similarity.pq_index_write(
-            emb, "vec_id", "embedding", idx,
-            dim=_PQ_DIM, m=_PQ_M, n_codewords=_PQ_CODEWORDS,
-            cell_col="label",
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    queries = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _PQ_QUERIES
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivfpq_topk_stored(
-        spark, idx, queries, "vec_id", "embedding",
+        spark, _pq_stored_index(sf_dir, emb, cell_col="label"),
+        emb.filter(F.col("vec_id") < _PQ_QUERIES), "vec_id", "embedding",
         dim=_PQ_DIM, m=_PQ_M, k=_PQ_TOPK, n_probe_cells=2,
     )
 
@@ -1490,21 +1439,13 @@ def x54c_incremental_semdedup_auto_stored(
     the probe alone.  Rows-only like every auto twin (k depends on a
     runtime count()); row-for-row agreement with
     x54_incremental_semdedup_auto is pinned by pytest."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.rstrip("/").encode()).hexdigest()[:12]
-    idx = os.path.join(_SEM_INDEX_ROOT, tag + "_auto")
-    marker = os.path.join(idx, "_DONE")
-    if not os.path.exists(marker):
-        emb = load_table(spark, sf_dir, "embeddings")
-        corpus = emb.filter(text.deterministic_split("vec_id") == "train")
-        similarity.semdedup_index_write_auto(
-            corpus, "vec_id", "embedding", idx, threshold=0.8
-        )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(text.deterministic_split("vec_id") == "train")
+    params = {"threshold": 0.8}
+    idx = index_store.ensure_index(
+        _SEM_INDEX_ROOT, "sem_auto", params, [f"{sf_dir}/embeddings.parquet"],
+        lambda d: similarity.semdedup_index_write_auto(corpus, "vec_id", "embedding", d, **params),
+    )
     batch = emb.filter(text.deterministic_split("vec_id") == "test")
     return similarity.semdedup_incremental_stored_auto(
         spark, idx, batch, "vec_id", "embedding", threshold=0.8

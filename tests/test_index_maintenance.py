@@ -4,7 +4,9 @@ half; these tests prove the steady-state loop — a batch admitted
 today is corpus for the batch that arrives tomorrow — for both index
 families that own per-batch admission state (LSH signatures, SemDeDup
 survivors).  The PQ index has no admission semantics (it indexes
-everything), so its lifecycle is build/rebuild only."""
+everything), so its lifecycle is build/rebuild only.  The
+``ensure_index`` tests at the end pin the build-or-reuse decision with
+a Spark-free ``build``."""
 
 from pyspark.sql import functions as F
 
@@ -594,3 +596,127 @@ def test_rebuild_index_crash_recovery(spark, tmp_path):
 
     # healthy index: no-op
     assert index_store.recover_rebuild(idx) is None
+
+
+class _CountingBuild:
+    """A Spark-free ``build`` for ensure_index: writes one file into
+    the staged dir it is given and counts its calls."""
+
+    def __init__(self, delay: float = 0.0, fail: bool = False):
+        self.calls = 0
+        self.delay = delay
+        self.fail = fail
+
+    def __call__(self, staged: str) -> None:
+        import os
+        import time
+
+        self.calls += 1
+        os.makedirs(staged)
+        with open(os.path.join(staged, "artifact"), "w") as fh:
+            fh.write("built")
+        time.sleep(self.delay)
+        if self.fail:
+            raise RuntimeError("build crashed")
+
+
+def _input_file(tmp_path):
+    p = tmp_path / "input.parquet"
+    p.write_bytes(b"rows")
+    return str(p)
+
+
+def test_ensure_index_builds_once_per_key(tmp_path):
+    import os
+
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    root, inp = str(tmp_path / "idx"), _input_file(tmp_path)
+    build = _CountingBuild()
+    a = index_store.ensure_index(root, "lsh", {"n": 3}, [inp], build)
+    b = index_store.ensure_index(root, "lsh", {"n": 3}, [inp], build)
+    assert a == b and build.calls == 1
+    assert os.path.dirname(a) == root and a.endswith("_lsh")
+    assert os.listdir(a) == ["artifact"]  # no transport marker left
+
+
+def test_ensure_index_param_change_rebuilds(tmp_path):
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    root, inp = str(tmp_path / "idx"), _input_file(tmp_path)
+    build = _CountingBuild()
+    a = index_store.ensure_index(root, "pq", {"m": 4}, [inp], build)
+    b = index_store.ensure_index(root, "pq", {"m": 8}, [inp], build)
+    assert a != b and build.calls == 2
+    # same params under another family (another layout) is another key
+    c = index_store.ensure_index(root, "sem_auto", {"m": 4}, [inp], build)
+    assert c not in (a, b) and c.endswith("_sem_auto") and build.calls == 3
+
+
+def test_ensure_index_touched_input_rebuilds(tmp_path):
+    import os
+
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    root, inp = str(tmp_path / "idx"), _input_file(tmp_path)
+    build = _CountingBuild()
+    a = index_store.ensure_index(root, "sem", {}, [inp], build)
+    st = os.stat(inp)
+    os.utime(inp, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    b = index_store.ensure_index(root, "sem", {}, [inp], build)
+    assert a != b and build.calls == 2
+    # a directory input is keyed by every file beneath it
+    d = tmp_path / "table.parquet"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x")
+    c = index_store.ensure_index(root, "sem", {}, [str(d)], build)
+    (d / "part-1.parquet").write_bytes(b"y")
+    e = index_store.ensure_index(root, "sem", {}, [str(d)], build)
+    assert c != e and build.calls == 4
+
+
+def test_ensure_index_concurrent_callers_build_once(tmp_path):
+    import threading
+
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    root, inp = str(tmp_path / "idx"), _input_file(tmp_path)
+    build = _CountingBuild(delay=0.3)
+    n = 8  # more callers than cores
+    start = threading.Barrier(n)
+    got = []
+
+    def call():
+        start.wait(timeout=30)
+        got.append(index_store.ensure_index(root, "lsh", {}, [inp], build))
+
+    threads = [threading.Thread(target=call) for _ in range(n)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert build.calls == 1
+    assert len(got) == n and len(set(got)) == 1
+
+
+def test_ensure_index_failed_build_leaves_no_live_dir(tmp_path):
+    import os
+
+    import pytest
+
+    from data_engineer_project_weather_analytics_spark.operators import index_store
+
+    root, inp = str(tmp_path / "idx"), _input_file(tmp_path)
+    with pytest.raises(RuntimeError):
+        index_store.ensure_index(root, "pq", {}, [inp], _CountingBuild(fail=True))
+    left = sorted(os.listdir(root))
+    # only the lock and the half-built staged residue: nothing live
+    assert len(left) == 2
+    assert left[0].endswith("_pq.lock") and left[1].endswith("_pq.rebuild_staged")
+
+    build = _CountingBuild()
+    idx = index_store.ensure_index(root, "pq", {}, [inp], build)
+    assert build.calls == 1
+    assert not os.path.exists(idx + ".rebuild_staged")
+    assert os.listdir(idx) == ["artifact"]
